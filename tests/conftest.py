@@ -3,6 +3,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import SparkSession
 
+from tree_sitter_codeviews_spark.session import driver_mem
+
 
 @pytest.fixture(scope="session")
 def spark() -> SparkSession:
@@ -14,7 +16,7 @@ def spark() -> SparkSession:
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "16g")
+        .config("spark.driver.memory", driver_mem())
         .config("spark.driver.extraJavaOptions", "-XX:-DontCompileHugeMethods")
         .getOrCreate()
     )

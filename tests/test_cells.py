@@ -80,15 +80,17 @@ def test_compact_cells():
 
 
 def test_spark_matches_numpy(spark):
+    """The Spark encode the geo queries run (F.expr of cells.cell_sql)
+    equals the numpy reference, including the clamped grid edges."""
     rng = np.random.RandomState(11)
-    lon = rng.uniform(-180, 180, 2000)
-    lat = rng.uniform(-90, 90, 2000)
+    lon = np.concatenate([rng.uniform(-180, 180, 2000), [-180.0, 180.0, 0.0, 179.999999]])
+    lat = np.concatenate([rng.uniform(-90, 90, 2000), [-90.0, 90.0, 0.0, -89.999999]])
     pdf = spark.createDataFrame(
         [(float(a), float(b)) for a, b in zip(lon, lat)], "lon double, lat double"
     )
-    for res in (4, 10):
+    for res in (4, 10, cells.MAX_RES):
         got = np.array(
-            pdf.select(cells.cell_col(F.col("lon"), F.col("lat"), res).alias("c"))
+            pdf.select(F.expr(cells.cell_sql("lon", "lat", res)).alias("c"))
             .toPandas()["c"]
         )
         want = cells.cell_from_lonlat_np(lon, lat, res)

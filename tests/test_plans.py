@@ -7,6 +7,8 @@ next scale-up.
 
 from __future__ import annotations
 
+import pytest
+
 from tree_sitter_codeviews_spark import plans
 from tree_sitter_codeviews_spark.operators.relational import q1_pricing, q5_region_revenue
 from tree_sitter_codeviews_spark.queries import geo_pip_docs, geo_tiles
@@ -244,3 +246,16 @@ def test_r5_traj_similarity_plan_shapes(spark, sf_tiny):
     assert "CartesianProduct" not in plan
     assert "SinglePartition" not in plan
     assert "Scan parquet" not in plan
+
+
+@pytest.mark.parametrize("name", [
+    "geo_pip_salted", "geo_vector_raster", "geo_overlay_stats",
+    "geo_cell_encode", "geo_s2_encode", "geo_pip_best", "geo_tiles",
+])
+def test_geo_point_queries_have_no_python_stage(spark, sf_tiny, name):
+    # the PIP refine, cell encode and S2 encode are JVM expressions: none of
+    # these queries may evaluate a Python UDF (no EvalPython node)
+    from tree_sitter_codeviews_spark import queries
+
+    df = getattr(queries, name)(spark, sf_tiny)
+    assert "EvalPython" not in plans.explain_str(df)

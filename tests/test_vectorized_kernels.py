@@ -4,6 +4,8 @@ to bound the pair space without touching informative pairs."""
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pandas as pd
 
@@ -31,21 +33,38 @@ def test_extract_text_fallback_and_null(spark):
     assert got[2] is None
 
 
-def test_fused_entities_equals_two_step(spark, sf_tiny):
-    # the single-round-trip UDF must produce exactly the two-step rows
+def _entities_ref(html) -> list[tuple[int, str, int]]:
+    """Scalar reference for the fused UDF: extract_text_py, then every
+    GEO_ddddd match with its ordinal and char offset."""
+    text = extract.extract_text_py(None if html is None else bytes(html))
+    if text is None:
+        return []
+    return [(i, m.group(0), m.start())
+            for i, m in enumerate(re.finditer(r"GEO_\d{5}", text))]
+
+
+def test_fused_entities_match_scalar_reference(spark, sf_tiny):
     from pyspark.sql import functions as F
     from tree_sitter_codeviews_spark.sources.pages import pages_df
 
-    pages = pages_df(spark, sf_tiny).limit(200)
-    fused = pages.select(
-        "url", F.explode(extract.extract_entities_fused_udf("html")).alias("e")
-    ).select("url", "e.entity_id", "e.surface", "e.char_offset")
-    two_step = pages.select(
-        "url", extract.extract_text_udf("html").alias("t")
-    ).select(
-        "url", F.explode(extract.extract_entities_udf("t")).alias("e")
-    ).select("url", "e.entity_id", "e.surface", "e.char_offset")
-    assert {tuple(r) for r in fused.collect()} == {tuple(r) for r in two_step.collect()}
+    pages = pages_df(spark, sf_tiny).limit(200).select("url", "html")
+    extra = spark.createDataFrame(
+        [("fallback", bytearray(b"<div>GEO_00001 <b>GEO_00002</b></div>")),
+         ("null", None)],
+        "url string, html binary",
+    )
+    rows = pages.unionByName(extra).select(
+        "url", "html", extract.extract_entities_fused_udf("html").alias("e")
+    ).collect()
+    n_entities = 0
+    for r in rows:
+        got = [(e.entity_id, e.surface, e.char_offset) for e in r.e]
+        assert got == _entities_ref(r.html), r.url
+        n_entities += len(got)
+    assert n_entities > 0
+    by_url = {r.url: r.e for r in rows}
+    assert [e.surface for e in by_url["fallback"]] == ["GEO_00001", "GEO_00002"]
+    assert by_url["null"] == []
 
 
 def test_langid_vectorized_matches_scalar(spark, sf_tiny):

@@ -15,10 +15,10 @@ Grid: at resolution r the world (lon in [-180,180), lat in [-90,90)) is a
 ``cell_id`` at res r is the 2r-bit Morton code of (x, y); res is carried in a
 separate column (like H3's resolution nibble, kept separate for cheap SQL).
 
-Three implementations, all bit-for-bit identical:
-- numpy (vectorized, for pandas-UDF paths and oracles),
-- Spark Column expressions (JVM-side, whole-stage-codegen'd — the hot path),
-- ANSI-SQL string generator (for the DuckDB correctness oracle).
+Two implementations, bit-for-bit identical: a numpy reference (tests and
+driver-side covers) and one SQL-text generator that serves both Spark
+(``F.expr``: JVM-side, whole-stage-codegen'd — the hot path) and the DuckDB
+correctness oracle.
 """
 
 from __future__ import annotations
@@ -87,18 +87,6 @@ def cell_center_lonlat(cell: np.ndarray, res: int):
     return lon, lat
 
 
-def cell_bounds(cell: int, res: int):
-    """(lon_min, lat_min, lon_max, lat_max) of one cell."""
-    x, y = morton_decode_np(np.asarray([cell], dtype=np.int64), res)
-    n = 1 << res
-    return (
-        -180.0 + 360.0 * x[0] / n,
-        -90.0 + 180.0 * y[0] / n,
-        -180.0 + 360.0 * (x[0] + 1) / n,
-        -90.0 + 180.0 * (y[0] + 1) / n,
-    )
-
-
 def ring_cells_np(x: np.ndarray, y: np.ndarray, res: int, t: int) -> np.ndarray:
     """For each (x,y): Morton ids of the ring at Chebyshev distance exactly t.
 
@@ -151,26 +139,16 @@ def compact_cells_np(cells: np.ndarray, res: int) -> list[tuple[int, int]]:
 
 
 # ---------------------------------------------------------------------------
-# Spark Column expressions (JVM-side — the hot path; no Python per row)
+# SQL-text generator (Spark via F.expr, and the DuckDB oracle)
 # ---------------------------------------------------------------------------
-
-# --- SQL-text twins (plan-build latency) -----------------------------------
 #
 # Building these expression trees through the Column API costs 2-4 py4j
-# round trips per operator — ~80-160 per morton_col call, measured ~0.1-0.15s
-# of DRIVER time per call site per plan build (the simhash_df /
-# pip_refine_expr finding). The twins build the IDENTICAL operator tree as
-# one SQL string in pure Python (one py4j round trip at F.expr); double
-# literals carry the D suffix so Spark does not parse them as DECIMAL.
-# Args are SQL text (a column name or any SQL expression).
-
-def morton_sql(x: str, y: str, res: int) -> str:
-    terms = ["cast(0 as bigint)"]
-    for i in range(res):
-        terms.append(f"shiftleft((shiftright({x}, {i}) & 1), {2 * i})")
-        terms.append(f"shiftleft((shiftright({y}, {i}) & 1), {2 * i + 1})")
-    return "(" + " | ".join(terms) + ")"
-
+# round trips per operator — ~80-160 per Morton interleave, measured
+# ~0.1-0.15 s of DRIVER time per call site per plan build (the simhash_df /
+# pip_refine_expr finding). SQL text builds the identical operator tree in
+# pure Python (one py4j round trip at F.expr). Double literals in the
+# Spark-only helpers carry the D suffix so Spark does not parse them as
+# DECIMAL. Args are SQL text (a column name or any SQL expression).
 
 def x_sql(lon: str, res: int) -> str:
     n = 1 << res
@@ -188,80 +166,8 @@ def cell_sql(lon: str, lat: str, res: int) -> str:
     return morton_sql(x_sql(lon, res), y_sql(lat, res), res)
 
 
-def x_from_cell_sql(cell: str, res: int) -> str:
-    terms = ["cast(0 as bigint)"]
-    for i in range(res):
-        terms.append(f"shiftleft((shiftright({cell}, {2 * i}) & 1), {i})")
-    return "(" + " | ".join(terms) + ")"
-
-
-def y_from_cell_sql(cell: str, res: int) -> str:
-    terms = ["cast(0 as bigint)"]
-    for i in range(res):
-        terms.append(f"shiftleft((shiftright({cell}, {2 * i + 1}) & 1), {i})")
-    return "(" + " | ".join(terms) + ")"
-
-
-def x_col(lon: Column, res: int) -> Column:
-    n = 1 << res
-    raw = F.floor((lon + F.lit(180.0)) / F.lit(360.0) * F.lit(float(n))).cast("long")
-    return F.greatest(F.lit(0), F.least(F.lit(n - 1), raw))
-
-
-def y_col(lat: Column, res: int) -> Column:
-    n = 1 << res
-    raw = F.floor((lat + F.lit(90.0)) / F.lit(180.0) * F.lit(float(n))).cast("long")
-    return F.greatest(F.lit(0), F.least(F.lit(n - 1), raw))
-
-
-def morton_col(x: Column, y: Column, res: int) -> Column:
-    """Morton interleave as a pure bit-op expression tree (codegen-friendly)."""
-    m = F.lit(0).cast("long")
-    for i in range(res):
-        m = m.bitwiseOR(F.shiftleft(F.shiftright(x, i).bitwiseAND(F.lit(1)), 2 * i))
-        m = m.bitwiseOR(F.shiftleft(F.shiftright(y, i).bitwiseAND(F.lit(1)), 2 * i + 1))
-    return m
-
-
-def cell_col(lon: Column, lat: Column, res: int) -> Column:
-    return morton_col(x_col(lon, res), y_col(lat, res), res)
-
-
-def parent_col(cell: Column, steps: int = 1) -> Column:
-    return F.shiftright(cell, 2 * steps)
-
-
-def x_from_cell_col(cell: Column, res: int) -> Column:
-    """De-interleave even bits (inverse of morton_col; JVM-side bit ops)."""
-    x = F.lit(0).cast("long")
-    for i in range(res):
-        x = x.bitwiseOR(F.shiftleft(F.shiftright(cell, 2 * i).bitwiseAND(F.lit(1)), i))
-    return x
-
-
-def y_from_cell_col(cell: Column, res: int) -> Column:
-    y = F.lit(0).cast("long")
-    for i in range(res):
-        y = y.bitwiseOR(F.shiftleft(F.shiftright(cell, 2 * i + 1).bitwiseAND(F.lit(1)), i))
-    return y
-
-
-def lon_center_col(x: Column, res: int) -> Column:
-    n = 1 << res
-    return F.lit(-180.0) + F.lit(360.0) * (x.cast("double") + F.lit(0.5)) / F.lit(float(n))
-
-
-def lat_center_col(y: Column, res: int) -> Column:
-    n = 1 << res
-    return F.lit(-90.0) + F.lit(180.0) * (y.cast("double") + F.lit(0.5)) / F.lit(float(n))
-
-
-# ---------------------------------------------------------------------------
-# ANSI-SQL generator (DuckDB oracle side)
-# ---------------------------------------------------------------------------
-
 def morton_sql(x_expr: str, y_expr: str, res: int) -> str:
-    """SQL expression computing the same Morton code as morton_np/morton_col."""
+    """SQL expression computing the same Morton code as morton_np."""
     terms = []
     for i in range(res):
         terms.append(f"((({x_expr} >> {i}) & 1) << {2 * i})")
@@ -277,6 +183,24 @@ def x_from_cell_sql(cell_expr: str, res: int) -> str:
 def y_from_cell_sql(cell_expr: str, res: int) -> str:
     terms = [f"((({cell_expr} >> {2 * i + 1}) & 1) << {i})" for i in range(res)]
     return "(" + " | ".join(terms) + ")"
+
+
+# ---------------------------------------------------------------------------
+# Spark Column helpers (single operators; no interleave)
+# ---------------------------------------------------------------------------
+
+def parent_col(cell: Column, steps: int = 1) -> Column:
+    return F.shiftright(cell, 2 * steps)
+
+
+def lon_center_col(x: Column, res: int) -> Column:
+    n = 1 << res
+    return F.lit(-180.0) + F.lit(360.0) * (x.cast("double") + F.lit(0.5)) / F.lit(float(n))
+
+
+def lat_center_col(y: Column, res: int) -> Column:
+    n = 1 << res
+    return F.lit(-90.0) + F.lit(180.0) * (y.cast("double") + F.lit(0.5)) / F.lit(float(n))
 
 
 # ---------------------------------------------------------------------------

@@ -40,9 +40,9 @@ def extract_text_py(b: bytes) -> str | None:
     return _TAG_RE.sub("", b.decode("utf-8"))
 
 
-@pandas_udf(T.StringType())
-def extract_text_udf(html: pd.Series) -> pd.Series:
-    """html binary -> extracted text. Byte-identical invariant bearer.
+def _page_text(html: pd.Series) -> pd.Series:
+    """html binary -> extracted text (NaN where html is null): the
+    vectorized ``extract_text_py``.
 
     Vectorized pandas string kernels (decode -> str.extract -> fallback
     str.replace) with the same pinned Python ``re`` patterns as the scalar
@@ -50,10 +50,28 @@ def extract_text_udf(html: pd.Series) -> pd.Series:
     byte-equivalent to searching the UTF-8 bytes. No per-row Python dispatch
     (round 1 used ``.map``; this was the flagship's cost center)."""
     s = html.str.decode("utf-8")
-    extracted = s.str.extract(_P_RE_STR, expand=False)
-    fallback = s.str.replace(_TAG_RE, "", regex=True)
-    out = extracted.fillna(fallback)
-    return out.where(s.notna(), None)
+    return s.str.extract(_P_RE_STR, expand=False).fillna(
+        s.str.replace(_TAG_RE, "", regex=True)
+    )
+
+
+def _geo_entities(text: pd.Series) -> pd.Series:
+    """text -> [(entity_id, surface, char_offset)] per page: every
+    ``GEO_\\d{5}`` match; entity_id = ordinal of occurrence within the page
+    (content-derived surrogate key, cf. reference ``custom_parser.py:45-57``
+    — NEVER monotonically_increasing_id)."""
+    def scan(t):
+        if t is None or (isinstance(t, float) and pd.isna(t)):
+            return []
+        return [(i, m.group(0), m.start()) for i, m in enumerate(_GEO_RE.finditer(t))]
+
+    return text.map(scan)
+
+
+@pandas_udf(T.StringType())
+def extract_text_udf(html: pd.Series) -> pd.Series:
+    """html binary -> extracted text. Byte-identical invariant bearer."""
+    return _page_text(html).where(html.notna(), None)
 
 
 _ENTITY_SCHEMA = T.ArrayType(
@@ -68,39 +86,13 @@ _ENTITY_SCHEMA = T.ArrayType(
 
 
 @pandas_udf(_ENTITY_SCHEMA)
-def extract_entities_udf(text: pd.Series) -> pd.Series:
-    """Scan text for gazetteer surfaces; entity_id = ordinal of occurrence
-    within the page (content-derived surrogate key, cf. reference
-    ``custom_parser.py:45-57`` — NEVER monotonically_increasing_id)."""
-    def one(t: str):
-        if t is None:
-            return []
-        return [
-            (i, m.group(0), m.start())
-            for i, m in enumerate(_GEO_RE.finditer(t))
-        ]
-
-    return text.map(one)
-
-
-@pandas_udf(_ENTITY_SCHEMA)
 def extract_entities_fused_udf(html: pd.Series) -> pd.Series:
-    """html -> entities in ONE Arrow round-trip: chains the exact
-    extract_text + entity-scan logic inside a single UDF so the page text
-    crosses the JVM<->Python boundary once, not twice (measured ~35% off
-    the flagship's UDF stage at sf0.1). Byte-identical to the two-step
-    path (pinned by tests/test_vectorized_kernels.py)."""
-    s = html.str.decode("utf-8")
-    text = s.str.extract(_P_RE_STR, expand=False).fillna(
-        s.str.replace(_TAG_RE, "", regex=True)
-    )
-
-    def scan(t):
-        if t is None or (isinstance(t, float) and pd.isna(t)):
-            return []
-        return [(i, m.group(0), m.start()) for i, m in enumerate(_GEO_RE.finditer(t))]
-
-    return text.map(scan)
+    """html -> entities in ONE Arrow round-trip: the page-text step and the
+    entity scan run inside a single UDF so the page text crosses the
+    JVM<->Python boundary once, not twice (measured ~35% off the flagship's
+    UDF stage at sf0.1). Pinned to ``extract_text_py`` plus a ``finditer``
+    scan by tests/test_vectorized_kernels.py."""
+    return _geo_entities(_page_text(html))
 
 
 def extract_pages(pages: DataFrame) -> DataFrame:

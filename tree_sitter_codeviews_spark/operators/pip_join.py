@@ -11,20 +11,16 @@ top-1 (there: ``longest_scope_match``, ``c_parser.py:134-140``; here: deepest
 Physical shape at 100 TB:
 - the polygon cover table is a small dim → **broadcast** equi-join (map-side,
   no shuffle of the 10^12-row points side);
-- the refine predicate is a single vectorized Arrow-batch pandas UDF applied
-  post-join (never a theta/cross join);
+- the refine predicate is one JVM expression applied post-join (whole-stage
+  codegen; never a theta/cross join);
 - the prefilter key is the point's *parent* cell at cover resolution —
   computed from its fine cell by bit-truncation, no re-encode.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 from ..localdf import arrow_local_df
 
 from .. import cells, geometry, layers
@@ -32,35 +28,12 @@ from .. import cells, geometry, layers
 # Prefilter grid: 64x64 world cells. Finer cover = fewer false candidates
 # reaching the exact refine (measured ~25% less join work than res 4 on the
 # built-in layer) while the exploded cover dim stays ~1k rows — broadcast
-# noise either way. The knob trades dim size vs refine work; res 6 is the
+# noise either way. It trades dim size vs refine work; res 6 is the
 # sweet spot for continent-scale polygons.
 COVER_RES = 6
 
-# rings keyed by polygon_id, shipped to executors via closure capture
-# (equivalent to a broadcast variable; the dim is constant and tiny)
-_RINGS: dict[int, np.ndarray] = {
-    p["polygon_id"]: np.asarray(p["ring"], dtype=np.float64) for p in layers.POLYGONS
-}
 
-
-def polygons_df(spark: SparkSession) -> DataFrame:
-    rows = [
-        (p["polygon_id"], p["admin_level"],
-         [(float(lon), float(lat)) for lon, lat in p["ring"]])
-        for p in layers.POLYGONS
-    ]
-    schema = T.StructType([
-        T.StructField("polygon_id", T.LongType()),
-        T.StructField("admin_level", T.IntegerType()),
-        T.StructField("ring", T.ArrayType(T.StructType([
-            T.StructField("lon", T.DoubleType()),
-            T.StructField("lat", T.DoubleType()),
-        ]))),
-    ])
-    return spark.createDataFrame(rows, schema)
-
-
-def cover_df(spark: SparkSession, res: int = COVER_RES) -> DataFrame:
+def cover_df(spark: SparkSession) -> DataFrame:
     """Exploded (cover_cell, polygon_id, admin_level, full) prefilter dim.
 
     ``full`` marks interior cells (whole cell ⊆ polygon): candidates landing
@@ -71,28 +44,13 @@ def cover_df(spark: SparkSession, res: int = COVER_RES) -> DataFrame:
     (``__init__.py:8-63``)."""
     rows = []
     for p in layers.POLYGONS:
-        cs, full = geometry.cover_cells_classified(p["ring"], res)
+        cs, full = geometry.cover_cells_classified(p["ring"], COVER_RES)
         for c, f in zip(cs, full):
             rows.append((int(c), p["polygon_id"], p["admin_level"], bool(f)))
     return arrow_local_df(
         spark, rows,
         "cover_cell long, polygon_id long, admin_level int, full boolean",
     )
-
-
-@pandas_udf(T.BooleanType())
-def pip_refine_udf(lon: pd.Series, lat: pd.Series, polygon_id: pd.Series) -> pd.Series:
-    """Exact ray-cast refine, vectorized per polygon group within the Arrow
-    batch. The general-layer path: works for any ring table (including ones
-    too large to bake into an expression)."""
-    out = np.zeros(len(lon), dtype=bool)
-    px = lon.to_numpy(dtype=np.float64)
-    py = lat.to_numpy(dtype=np.float64)
-    pid = polygon_id.to_numpy(dtype=np.int64)
-    for p in np.unique(pid):
-        m = pid == p
-        out[m] = geometry.pip_mask(px[m], py[m], _RINGS[int(p)])
-    return pd.Series(out)
 
 
 def _d(x: float) -> str:
@@ -113,9 +71,9 @@ def pip_refine_expr(lon: str = "lon", lat: str = "lat",
     zero (horizontal edge) yields Inf/NaN whose comparison is false, exactly
     matching the numpy errstate-masked path.
 
-    Measured vs the Arrow UDF on 5M rows: the UDF path anti-scales in local
-    mode at high thread counts (JVM task threads + Python workers > CPUs);
-    the expression path stays inside codegen and scales with cores.
+    Measured vs an Arrow-UDF refine on 5M rows: the UDF path anti-scales in
+    local mode at high thread counts (JVM task threads + Python workers >
+    CPUs); the expression path stays inside codegen and scales with cores.
 
     Built as ONE SQL text expression (F.expr) instead of per-edge Column
     operators: the Column-builder construction was ~6,300 py4j round trips
@@ -143,32 +101,23 @@ def pip_refine_expr(lon: str = "lon", lat: str = "lat",
 def pip_join(
     points: DataFrame,
     spark: SparkSession,
-    point_res: int = layers.GRID_RES,
-    cover_res: int = COVER_RES,
     keys: tuple[str, ...] = ("url",),
-    refine: str = "jvm",
 ) -> DataFrame:
     """points(keys..., lon, lat [, cell]) -> (keys..., cell_id, polygon_id).
 
-    ``cell_id`` is the point's cell at ``point_res``; the prefilter key is
-    its ancestor at ``cover_res`` via bit-truncation (parent_col).
-    ``refine``: "jvm" (codegen expression — the hot path for a literal
-    layer) or "udf" (Arrow-vectorized numpy — arbitrary ring tables).
-    Both are bit-identical to the oracle."""
+    ``cell_id`` is the point's cell at ``layers.GRID_RES``; the prefilter key
+    is its ancestor at ``COVER_RES`` via bit-truncation (parent_col). The
+    exact refine is ``pip_refine_expr``, bit-identical to the oracle."""
     if "cell" not in points.columns:
-        points = points.withColumn("cell", F.expr(cells.cell_sql("lon", "lat", point_res)))
+        points = points.withColumn(
+            "cell", F.expr(cells.cell_sql("lon", "lat", layers.GRID_RES)))
     pts = points.withColumn(
-        "cover_cell", cells.parent_col(F.col("cell"), point_res - cover_res)
+        "cover_cell", cells.parent_col(F.col("cell"), layers.GRID_RES - COVER_RES)
     )
-    cov = cover_df(spark, cover_res)
-    cand = pts.join(F.broadcast(cov), "cover_cell", "inner")
-    refine_col = (
-        pip_refine_expr("lon", "lat", "polygon_id") if refine == "jvm"
-        else pip_refine_udf(F.col("lon"), F.col("lat"), F.col("polygon_id"))
-    )
+    cand = pts.join(F.broadcast(cover_df(spark)), "cover_cell", "inner")
     # interior cells short-circuit the exact test (cell ⊆ polygon); only
     # boundary candidates evaluate the ray-cast
-    refined = cand.filter(F.col("full") | refine_col)
+    refined = cand.filter(F.col("full") | pip_refine_expr("lon", "lat", "polygon_id"))
     return refined.select(
         *keys, F.col("cell").alias("cell_id"), "polygon_id", "admin_level"
     )

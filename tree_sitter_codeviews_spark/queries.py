@@ -103,7 +103,7 @@ def geo_pip_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     hot-cover-cell pre-pass + salted broadcast candidate join (skew.py).
     Correctness gate proves salting is value-transparent."""
     from . import skew
-    from .operators.pip_join import COVER_RES, cover_df, pip_refine_udf
+    from .operators.pip_join import COVER_RES, cover_df, pip_refine_expr
 
     pts = pages_src.doc_points_df(spark, sf_dir).withColumn(
         "cell", F.expr(cells.morton_sql("gx", "gy", layers.GRID_RES))
@@ -112,12 +112,10 @@ def geo_pip_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     hot = skew.hot_keys(pts, "cover_cell", threshold_frac=0.01)
     cand = skew.salted_join(
-        pts, cover_df(spark, COVER_RES), "cover_cell",
+        pts, cover_df(spark), "cover_cell",
         hot=hot, salt_col=F.xxhash64("doc_id"), n_salt=8,
     )
-    refined = cand.filter(
-        F.col("full") | pip_refine_udf(F.col("lon"), F.col("lat"), F.col("polygon_id"))
-    )
+    refined = cand.filter(F.col("full") | pip_refine_expr("lon", "lat", "polygon_id"))
     return refined.select("doc_id", F.col("cell").alias("cell_id"), "polygon_id")
 
 
@@ -1782,7 +1780,7 @@ def webtext_geo_hosts(spark: SparkSession, sf_dir: str) -> DataFrame:
     a deterministic res-7 grid cell (x = host*13 % 128, y = host*29 %
     128 — a geo-IP dim in fixture form), pages aggregate per cell, and
     the res-5 parent supports the coarse rollup. Pure integer Morton
-    encode (cells.morton_col) + one aggregate — the webtext x geospatial
+    encode (cells.morton_sql) + one aggregate — the webtext x geospatial
     composition, no floats anywhere."""
     from . import cells
 

@@ -14,10 +14,11 @@ is why it is also the engine's z-order *repartitioning* key (``skew.py``):
 ``repartitionByRange(hilbert)`` gives contiguous spatial tiles per partition
 with no long-range jumps.
 
-Three bit-identical implementations (same discipline as ``cells.py``):
-numpy (vectorized — the pandas-UDF hot path, per the north rule's
-"vectorized pandas/Arrow UDFs"), a pandas UDF wrapper, and a DuckDB SQL
-generator (an unrolled per-level CTE chain) for the correctness oracle.
+Bit-identical implementations (same discipline as ``cells.py``): a numpy
+reference, one SQL-text/JVM path (``with_hilbert_col``: the branchless
+transform as staged projections; ``hilbert_coarse_col`` is its bounded form
+for res <= 4 route keys), and a DuckDB SQL generator (an unrolled per-level
+CTE chain) for the correctness oracle.
 
 Algorithm: the standard iterative xy->d Hilbert transform (public domain,
 en.wikipedia.org/wiki/Hilbert_curve#Applications_and_mapping_algorithms),
@@ -27,18 +28,15 @@ MSB-first digit accumulation with quadrant rotation.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 S2_RES = 16           # finest level computed; coarser levels by truncation
 S2_LEVELS = (12, 13, 14, 15, 16)
 
 
 # ---------------------------------------------------------------------------
-# numpy (vectorized reference + UDF kernel)
+# numpy (vectorized reference)
 # ---------------------------------------------------------------------------
 
 def hilbert_np(x: np.ndarray, y: np.ndarray, res: int) -> np.ndarray:
@@ -60,11 +58,6 @@ def hilbert_np(x: np.ndarray, y: np.ndarray, res: int) -> np.ndarray:
         x, y = np.where(swap, yf, xf), np.where(swap, xf, yf)
         s >>= 1
     return d
-
-
-def hilbert_parent_np(cell: np.ndarray, steps: int = 1) -> np.ndarray:
-    """Hilbert is self-similar: parent = truncation, same as Morton."""
-    return np.asarray(cell, dtype=np.int64) >> (2 * steps)
 
 
 _M = 16          # internal coordinate width of the branchless transform
@@ -129,10 +122,10 @@ def with_hilbert_col(
     a named column — Catalyst keeps multi-referenced non-cheap aliases
     materialized instead of inlining, bounding the expression tree).
 
-    Zero Python per row; whole-stage codegen end to end. Preferred over
-    ``hilbert_udf`` on the hot path: in local mode the Arrow-UDF pipeline
-    adds a Python worker per core (oversubscription), and on a real cluster
-    it adds serialization; this is pure columnar JVM work.
+    Zero Python per row; whole-stage codegen end to end. An Arrow-UDF
+    encode would add a Python worker per core in local mode
+    (oversubscription) and serialization on a real cluster; this is pure
+    columnar JVM work.
 
     Expressions assemble as SQL text (one F.expr per staged column — the
     per-operator Column-builder version measured ~2,800 py4j round trips =
@@ -203,21 +196,6 @@ def with_hilbert_col(
     )
 
 
-# ---------------------------------------------------------------------------
-# Spark surface: vectorized pandas UDF (Arrow-batched; zero per-row Python)
-# ---------------------------------------------------------------------------
-
-def hilbert_udf(res: int = S2_RES):
-    """pandas UDF (gx, gy at ``res``) -> hilbert cell id (long)."""
-
-    @pandas_udf(T.LongType())
-    def _h(gx: pd.Series, gy: pd.Series) -> pd.Series:
-        out = hilbert_np(gx.to_numpy(dtype=np.int64), gy.to_numpy(dtype=np.int64), res)
-        return pd.Series(out)
-
-    return _h
-
-
 def hilbert_at_level_col(h_finest: Column, level: int, finest: int = S2_RES) -> Column:
     return F.shiftright(h_finest, 2 * (finest - level))
 
@@ -285,7 +263,8 @@ def hilbert_cte_chain_sql(
     ``src_cte`` must expose ``key_cols`` plus expressions ``x_expr``/``y_expr``
     (grid coords at ``res``). The final CTE ``out_cte`` has (key_cols, d).
     One CTE per level keeps every expression bounded (no exponential
-    expression-tree blowup — the reason the Spark side uses the numpy UDF).
+    expression-tree blowup — the reason the Spark side stages named
+    columns in ``with_hilbert_col``).
     """
     n = 1 << res
     parts = [

@@ -65,6 +65,23 @@ def _fs_shim_classpath() -> str | None:
     return _SHIM_CACHE if os.path.exists(cls) else None
 
 
+def driver_mem() -> str:
+    """Driver heap: ``$SPARK_GRAFT_DRIVER_MEM`` if set, else min(16g, ~55% of
+    the host's MemTotal) — a fixed 16g heap (pinned by -Xms) fails to map on
+    hosts with less memory than that."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    cap_mb = 16 * 1024
+    try:
+        with open("/proc/meminfo") as f:
+            total_kb = next(int(line.split()[1]) for line in f
+                            if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return f"{cap_mb}m"
+    return f"{min(cap_mb, total_kb * 55 // 100 // 1024)}m"
+
+
 def get_spark(
     app_name: str = "tree_sitter_codeviews_spark",
     cores: int | None = None,
@@ -88,6 +105,7 @@ def get_spark(
         n = cores
     if shuffle_partitions is None:
         shuffle_partitions = max(n, 32)
+    heap = driver_mem()
 
     builder = (
         SparkSession.builder.master(master)
@@ -108,7 +126,7 @@ def get_spark(
         # stock 1 MB floor.
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
                 os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION", "64k"))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", heap)
         # -Xms pins the initial heap: incremental heap growth under load
         # causes full-GC storms with multi-x wall-clock variance in local
         # mode. -XX:-DontCompileHugeMethods lets HotSpot JIT whole-stage-
@@ -116,7 +134,7 @@ def get_spark(
         # generated predicates (e.g. the unrolled ray-cast refine) silently
         # run in the bytecode interpreter (measured 24x slower).
         .config("spark.driver.extraJavaOptions",
-                f"-Xms{os.environ.get('SPARK_GRAFT_DRIVER_MEM', '16g')} "
+                f"-Xms{heap} "
                 "-XX:-DontCompileHugeMethods")
         .config("spark.executor.extraJavaOptions", "-XX:-DontCompileHugeMethods")
         .config("spark.sql.session.timeZone", "UTC")
