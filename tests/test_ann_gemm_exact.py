@@ -117,3 +117,28 @@ def test_gt_candidates_cover_global_topk_multibatch(spark, sf_tiny, small_batche
     }
     assert got == want
     assert got
+
+
+def test_pq_gemm_exact_at_contract_edge_and_raises_beyond():
+    """The float64 GEMM equals the int64 subtract-square reference for
+    coordinates up to 2^20 - 1, and out-of-contract coordinates (in either
+    the vectors or the codebook) raise instead of yielding wrong codes."""
+    rng = np.random.default_rng(7)
+    lim = ann.PQ_COORD_LIMIT
+    x = rng.integers(-(lim - 1), lim, size=(5, ann.PQ_M * ann.PQ_DSUB), dtype=np.int64)
+    x[0, :] = lim - 1
+    x[1, :] = -(lim - 1)
+    cb = rng.integers(-(lim - 1), lim, size=(ann.PQ_M, 4, ann.PQ_DSUB), dtype=np.int64)
+    sub = x.reshape(5, ann.PQ_M, 1, ann.PQ_DSUB)
+    want = ((sub - cb[None]) ** 2).sum(-1)
+    np.testing.assert_array_equal(ann._pq_d2_batch(x, cb), want)
+
+    for bad in (lim, -lim, np.iinfo(np.int64).min):
+        xb = x.copy()
+        xb[2, 3] = bad
+        with pytest.raises(ValueError, match="2\\^20"):
+            ann._pq_d2_batch(xb, cb)
+        cbb = cb.copy()
+        cbb[1, 2, 0] = bad
+        with pytest.raises(ValueError, match="2\\^20"):
+            ann._pq_d2_batch(x, cbb)

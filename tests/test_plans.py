@@ -259,3 +259,30 @@ def test_geo_point_queries_have_no_python_stage(spark, sf_tiny, name):
 
     df = getattr(queries, name)(spark, sf_tiny)
     assert "EvalPython" not in plans.explain_str(df)
+
+
+def test_flagship_plan_build_round_trips(spark, sf_tiny, monkeypatch):
+    # the pages, gazetteer and entity projections are SQL text, not Column
+    # builders: one warm geo_pip_entities build must stay a few hundred py4j
+    # round trips (1,200-1,500 with Column-built projections)
+    import threading
+
+    from py4j.java_gateway import GatewayClient
+
+    from tree_sitter_codeviews_spark.queries import geo_pip_entities
+
+    geo_pip_entities(spark, sf_tiny)  # warm: table footers, UDF registration
+    sent = [0]
+    send = GatewayClient.send_command
+    me = threading.get_ident()
+
+    def counting(self, *args, **kwargs):
+        # only this thread's calls: py4j's finalizer thread concurrently
+        # sends deletes for proxies that earlier code left to the collector
+        sent[0] += threading.get_ident() == me
+        return send(self, *args, **kwargs)
+
+    monkeypatch.setattr(GatewayClient, "send_command", counting)
+    geo_pip_entities(spark, sf_tiny)
+    monkeypatch.undo()
+    assert 0 < sent[0] <= 400, sent[0]

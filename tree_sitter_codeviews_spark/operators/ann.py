@@ -479,6 +479,7 @@ def lsh_bucketed_topk(
 
 PQ_M, PQ_DSUB, PQ_K = 8, 8, 64  # M * DSUB == dim; 8x6-bit codes pack in a long
 PQ_SAMPLE_MOD = 3               # codebook sample: vec_id % MOD == 1, first K
+PQ_COORD_LIMIT = 1 << 20        # exactness bound of the float64 GEMM in _pq_d2_batch
 
 
 def _pq_codebook_from(sample: np.ndarray) -> np.ndarray:
@@ -506,7 +507,13 @@ def _pq_d2_batch(x: np.ndarray, cb: np.ndarray) -> np.ndarray:
     every DSUB-term sum stays far below 2^53 — float64 is EXACT here, and
     the cast back to int64 is lossless. (The former broadcast-subtract
     formulation allocated B x K x DSUB temporaries — memory traffic, not
-    arithmetic, dominated its cost.)"""
+    arithmetic, dominated its cost.) Coordinates of 2^20 or more break that
+    contract and raise ValueError instead of yielding wrong codes: below it
+    every DSUB-term sum stays under 2^53."""
+    for a in (x, cb):  # min/max, not abs: abs(int64 min) overflows
+        if a.size and (a.max() >= PQ_COORD_LIMIT or a.min() <= -PQ_COORD_LIMIT):
+            raise ValueError("pq: |coordinate| >= 2^20 breaks the exact float64 "
+                             f"GEMM (range {a.min()}..{a.max()})")
     b = x.shape[0]
     sub = x.reshape(b, PQ_M, PQ_DSUB).astype(np.float64)     # (B, M, D)
     c = cb.astype(np.float64)                                # (M, K, D)

@@ -3,12 +3,15 @@
 The engine analogue of the reference's preprocess + tokenize stage
 (``utils/preprocessor.py:6-68``, ``tree_parser/c_parser.py:142-278``):
 a pure function of the page bytes, byte-identical per url across reruns and
-parallelism levels. Per SURVEY.md §7.4(1) the invariant-bearing path uses
-Python ``re`` inside the UDF (never SQL regex) so the semantics are pinned to
-one engine.
+parallelism levels. Per SURVEY.md §7.4(1) the invariant-bearing path keeps
+Python semantics inside the UDF (never SQL regex), and tests pin it to the
+``re``-based scalar reference ``extract_text_py``.
 
-All UDFs are scalar pandas UDFs (Arrow batches, vectorized pandas string ops
-where possible) — zero per-row Python round trips through the JVM boundary.
+The page-text kernel is two ``str.find`` calls per page, which return exactly
+what the reference's lazy ``<p>(.*?)</p>`` DOTALL search returns (the
+argument is in ``_text_of``); only pages without a ``<p>…</p>`` pair run the
+tag-strip regex. The lazy regex, not per-row dispatch, was the flagship's
+cost center: the find kernel is about ten times cheaper on ~5 KB pages.
 """
 
 from __future__ import annotations
@@ -24,7 +27,6 @@ from pyspark.sql.functions import pandas_udf
 # the page template is <title>url</title> ... <p>BODY</p>; extraction contract
 # is "text inside the first <p> element", tags stripped, no entity decoding.
 _P_RE = re.compile(rb"<p>(.*?)</p>", re.DOTALL)
-_P_RE_STR = re.compile(r"<p>(.*?)</p>", re.DOTALL)
 _TAG_RE = re.compile(r"<[^>]+>")
 _GEO_RE = re.compile(r"GEO_\d{5}")
 
@@ -40,18 +42,30 @@ def extract_text_py(b: bytes) -> str | None:
     return _TAG_RE.sub("", b.decode("utf-8"))
 
 
-def _page_text(html: pd.Series) -> pd.Series:
-    """html binary -> extracted text (NaN where html is null): the
-    vectorized ``extract_text_py``.
+def _text_of(t: str) -> str:
+    """Body of the first ``<p>…</p>`` of ``t``, else ``t`` with tags stripped.
 
-    Vectorized pandas string kernels (decode -> str.extract -> fallback
-    str.replace) with the same pinned Python ``re`` patterns as the scalar
-    reference — the delimiters are ASCII, so searching the decoded string is
-    byte-equivalent to searching the UTF-8 bytes. No per-row Python dispatch
-    (round 1 used ``.map``; this was the flagship's cost center)."""
-    s = html.str.decode("utf-8")
-    return s.str.extract(_P_RE_STR, expand=False).fillna(
-        s.str.replace(_TAG_RE, "", regex=True)
+    Equal to ``re.search(r"<p>(.*?)</p>", t, re.DOTALL).group(1)`` when that
+    matches: a match at any ``<p>`` needs a later ``</p>``, and every later
+    ``</p>`` also follows the leftmost ``<p>``, so the leftmost match starts
+    at the leftmost ``<p>``; the lazy group then ends at the first ``</p>``
+    starting after it. Both delimiters are ASCII, so searching the decoded
+    text finds the same spans as the reference's search over UTF-8 bytes."""
+    i = t.find("<p>")
+    if i >= 0:
+        j = t.find("</p>", i + 3)
+        if j >= 0:
+            return t[i + 3:j]
+    return _TAG_RE.sub("", t)
+
+
+def _page_text(html: pd.Series) -> pd.Series:
+    """html binary -> extracted text (None where html is null): the batch
+    form of ``extract_text_py``. Each page is decoded strictly (invalid
+    UTF-8 raises), then cut by ``_text_of``."""
+    return pd.Series(
+        [None if b is None else _text_of(b.decode("utf-8")) for b in html],
+        index=html.index, dtype=object,
     )
 
 
@@ -71,7 +85,7 @@ def _geo_entities(text: pd.Series) -> pd.Series:
 @pandas_udf(T.StringType())
 def extract_text_udf(html: pd.Series) -> pd.Series:
     """html binary -> extracted text. Byte-identical invariant bearer."""
-    return _page_text(html).where(html.notna(), None)
+    return _page_text(html)
 
 
 _ENTITY_SCHEMA = T.ArrayType(
@@ -91,7 +105,7 @@ def extract_entities_fused_udf(html: pd.Series) -> pd.Series:
     entity scan run inside a single UDF so the page text crosses the
     JVM<->Python boundary once, not twice (measured ~35% off the flagship's
     UDF stage at sf0.1). Pinned to ``extract_text_py`` plus a ``finditer``
-    scan by tests/test_vectorized_kernels.py."""
+    scan by tests/test_vectorized_kernels.py and tests/test_extract_kernel.py."""
     return _geo_entities(_page_text(html))
 
 
@@ -115,8 +129,8 @@ def page_entities(pages: DataFrame, gazetteer: DataFrame) -> DataFrame:
     exploded = pages.select(
         "url", "doc_id",
         F.explode(extract_entities_fused_udf(F.col("html"))).alias("e"),
-    ).select("url", "doc_id", "e.entity_id", "e.surface", "e.char_offset")
-    return exploded.join(F.broadcast(gazetteer), "surface", "inner").select(
+    ).selectExpr("url", "doc_id", "e.entity_id", "e.surface", "e.char_offset")
+    return exploded.join(F.broadcast(gazetteer), "surface", "inner").selectExpr(
         "url", "doc_id", "entity_id", "surface", "char_offset",
         "lon", "lat", "entity_kind",
     )
